@@ -60,17 +60,23 @@ object Bench {
     }
     sentinel(record = false) // its own codegen, untimed
     sentinel(record = true)
+    // a failing query keeps its elapsed time in the map and in
+    // "value", and is named in "failed"
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.zipWithIndex.map {
       case ((name, fn), i) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         if ((i + 1) % 30 == 0) sentinel(record = true)
         name -> dt
     }.toMap
     sentinel(record = true)
     spark.stop()
-    println(renderLine(results, sentinels.toSeq, sfDir))
+    println(renderLine(results, sentinels.toSeq, sfDir, failed.toSeq))
   }
 
   /** The multi-ingest registry DEMOS (write-path by design): their
@@ -84,10 +90,13 @@ object Bench {
 
   /** The one-line JSON the driver captures, with the char-budget
     * ladder applied. Pure — BenchLineSpec drives it to 300 synthetic
-    * keys and asserts every rung's output parses and fits.
+    * keys and asserts every rung's output parses and fits. `failed`
+    * names the queries that threw; every rung carries them as a
+    * `"failed"` list of short keys, absent when none failed.
     */
   def renderLine(results: Map[String, Double],
-      sentinels: Seq[Double], sfDir: String): String = {
+      sentinels: Seq[Double], sfDir: String,
+      failed: Seq[String] = Nil): String = {
     // The driver captures only the LAST 2000 chars of stdout, and sbt
     // appends an ~80-char "[success] Total time" trailer after us. The
     // whole JSON line must therefore start inside that window or the
@@ -122,6 +131,10 @@ object Bench {
     // the cheapest honest encoding at this char budget
     val sentCs = sentinels.map(v => math.round(v * 100).toString)
       .mkString(""","sent_cs":[""", ",", "]")
+    val failedNote =
+      if (failed.isEmpty) ""
+      else failed.map(k => "\"" + shortKey(k) + "\"").sorted
+        .mkString(""","failed":[""", ",", "]")
     // Sentinel-normalized total (r12 verdict #6): the last two
     // rounds' gate readings were contended-host artifacts that took
     // a manual adjudication each to dismiss. The median sentinel in
@@ -165,14 +178,14 @@ object Bench {
         (if (minQ > 0) s""","minq":$minQ""" else "") +
         (if (qUnit.nonEmpty) s""","q_unit":"$qUnit"""" else "")
       // demo/read-path split (see DemoQueries): positive-time sums so
-      // a failed (-1) entry never skews a subtotal
+      // a negative (caller-marked) entry never skews a subtotal
       val demo = results.collect {
         case (k, v) if DemoQueries.contains(shortKey(k)) && v > 0 => v
       }.sum
       val readpath = results.values.filter(_ > 0).sum - demo
       val split =
         s""","value_readpath":${f2(readpath)},"value_demo":${f2(demo)}"""
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec"${normNote(total)}$split,"queries":$qs$keyNote$sentCs,"sf":"$sfShort"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec"${normNote(total)}$split,"queries":$qs$keyNote$failedNote$sentCs,"sf":"$sfShort"}"""
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Budget: the driver keeps the LAST 2000 chars of stdout; sbt
@@ -207,6 +220,6 @@ object Bench {
     else if (line0.length <= cap) line0
     else if (lineCs.length <= cap) lineCs
     else lineMin.getOrElse(
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec"${normNote(total)}$sentCs,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec"${normNote(total)}$failedNote$sentCs,"sf":"$sfDir"}""")
   }
 }

@@ -47,6 +47,10 @@ object GraftSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // parquet TIMESTAMP(NANOS) columns read as long nanos (the
+      // vectorized reader rejects them otherwise); `Tables.table`
+      // relies on it to resolve and normalize events.ts
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // native expressions (graft_dot, graft_simhash60,
       // graft_term_counts) registered into every session's SQL

@@ -60,6 +60,25 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.contains("\"q99\":-1"))
   }
 
+  test("a failed query is named in the failed key, on every rung, and " +
+      "still counts in value") {
+    val r = Map("q1_a" -> 2.0, "q2_broken" -> 0.5)
+    val line = Bench.renderLine(r, Seq(0.1), "/x/sf0.01",
+      failed = Seq("q2_broken"))
+    val json = parse(line)
+    assert((json \ "failed").values == List("q2"), line)
+    assert(line.contains("\"value\":2.50"), line)
+    assert(line.contains("\"q2\":0.5"), line)
+    // no failures: no key
+    assert(!Bench.renderLine(r, Seq(0.1), "/x/sf0.01").contains("failed"))
+    // the map-less last rung keeps the failure visible
+    val slow = (1 to 300).map(i => s"q${i}_x" -> (1.5 + i % 3)).toMap
+    val last = Bench.renderLine(slow, Seq(0.1), "/x/sf0.1",
+      failed = Seq("q7_x"))
+    assert(!last.contains("\"queries\""), last)
+    assert((parse(last) \ "failed").values == List("q7"), last)
+  }
+
   test("sentinel-normalized total: sent_med_cs is the upper-middle " +
       "median, value_norm DISCOUNTS contended readings only, absent " +
       "without sentinels") {

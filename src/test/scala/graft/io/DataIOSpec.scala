@@ -110,37 +110,80 @@ class DataIOSpec extends SparkSpec {
     assert(DataIO.read(spark, "parquet", path).count() == 3)
   }
 
+  // events.parquet directories written by Spark in the three ts
+  // physical shapes the driver has shipped across rounds
+  // (TIMESTAMP(NANOS) read as long under nanosAsLong; plain
+  // TIMESTAMP(MICROS) inferred as TIMESTAMP_NTZ; zoned micros) — r8
+  // silently lost 10 queries to a switch between them
+  private val micros = 1700000000123456L // 2023-11-14T22:13:20.123456Z
+  private lazy val eventsDirs: Seq[String] = {
+    def writeEvents(dir: String, frame: org.apache.spark.sql.DataFrame)
+        : String = {
+      frame.write.mode("overwrite").parquet(s"$dir/events.parquet")
+      dir
+    }
+    Seq(
+      writeEvents(s"$tmp/ev_nanos",
+        Seq((1L, micros * 1000L)).toDF("event_id", "ts")),
+      writeEvents(s"$tmp/ev_ntz", Seq((1L, micros)).toDF("event_id", "us")
+        .select(col("event_id"),
+          expr("timestamp_micros(us)").cast(TimestampNTZType).as("ts"))),
+      writeEvents(s"$tmp/ev_tz", Seq((1L, micros)).toDF("event_id", "us")
+        .select(col("event_id"), expr("timestamp_micros(us)").as("ts"))))
+  }
+
   test("Tables.table normalizes every events.ts physical variant to " +
       "UTC TimestampType") {
-    // the driver has regenerated events.parquet with different ts
-    // physical types across rounds (TIMESTAMP(NANOS) read as long
-    // under nanosAsLong; plain TIMESTAMP(MICROS) inferred as
-    // TIMESTAMP_NTZ) — r8 silently lost 10 queries to the switch.
-    // Pin all three branches to the same wall-clock micros.
-    val micros = 1700000000123456L // 2023-11-14T22:13:20.123456Z
-    def writeEvents(dir: String, frame: org.apache.spark.sql.DataFrame)
-        : Unit =
-      frame.write.mode("overwrite").parquet(s"$dir/events.parquet")
-
-    // legacy shape: ts as long nanos
-    val nanosDir = s"$tmp/ev_nanos"
-    writeEvents(nanosDir,
-      Seq((1L, micros * 1000L)).toDF("event_id", "ts"))
-    // current shape: ts as TIMESTAMP_NTZ micros
-    val ntzDir = s"$tmp/ev_ntz"
-    writeEvents(ntzDir, Seq((1L, micros)).toDF("event_id", "us")
-      .select(col("event_id"),
-        expr("timestamp_micros(us)").cast(TimestampNTZType).as("ts")))
-    // already-zoned shape: plain TimestampType passes through
-    val tzDir = s"$tmp/ev_tz"
-    writeEvents(tzDir, Seq((1L, micros)).toDF("event_id", "us")
-      .select(col("event_id"), expr("timestamp_micros(us)").as("ts")))
-
-    for (dir <- Seq(nanosDir, ntzDir, tzDir)) {
+    for (dir <- eventsDirs) {
       val out = Tables.table(spark, dir, "events")
       assert(out.schema("ts").dataType == TimestampType, dir)
       assert(out.select(unix_micros(col("ts"))).as[Long].head() == micros,
         dir)
     }
+  }
+
+  test("Tables.table starts no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val dirs = eventsDirs // written before the count starts
+    org.apache.spark.GraftListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      Tables.table(spark, "perfbench/data/sf0.01", "orders")
+      dirs.foreach(Tables.table(spark, _, "events"))
+      org.apache.spark.GraftListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get() == 0)
+  }
+
+  test("Tables.table reads the schema Spark's parquet inference gives") {
+    // single pyarrow-written files, copied from the benchmark tables
+    val single = s"$tmp/pyarrow"
+    Files.createDirectories(Paths.get(single))
+    for (n <- Seq("orders", "embeddings")) {
+      Files.copy(Paths.get(s"perfbench/data/sf0.01/$n.parquet"),
+        Paths.get(s"$single/$n.parquet"))
+      assert(Tables.table(spark, single, n).schema ==
+        spark.read.parquet(s"$single/$n.parquet").schema, n)
+    }
+    // Spark-written directories: the read Tables.table makes, before
+    // the events.ts normalization
+    for (dir <- eventsDirs) {
+      val path = s"$dir/events.parquet"
+      assert(spark.read.schema(Tables.footerSchema(spark, path))
+        .parquet(path).schema == spark.read.parquet(path).schema, dir)
+    }
+  }
+
+  test("Tables.table fails at the call on a missing table") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.table(spark, s"$tmp/nowhere", "orders"))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 }

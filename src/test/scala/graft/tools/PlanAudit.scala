@@ -91,20 +91,33 @@ object PlanAudit {
     (sf, m)
   }
 
-  def main(args: Array[String]): Unit = {
-    val write = args.contains("--write")
+  val Usage =
+    "usage: PlanAudit <sfDir> [--write] [--budget <file>] [queryName...]"
+
+  final case class Args(sfDir: String, write: Boolean, budgetFile: String,
+      only: Set[String])
+
+  /** Parse the command line; a malformed one throws
+    * `IllegalArgumentException` with [[Usage]]. `--budget` must be
+    * followed by a file name that is not itself a flag.
+    */
+  def parseArgs(args: Array[String]): Args = {
     val budgetIdx = args.indexOf("--budget")
+    require(budgetIdx < 0 || (budgetIdx + 1 < args.length
+      && !args(budgetIdx + 1).startsWith("--")), Usage)
     val budgetFile =
-      if (budgetIdx >= 0 && budgetIdx + 1 < args.length) args(budgetIdx + 1)
-      else BudgetFile
+      if (budgetIdx >= 0) args(budgetIdx + 1) else BudgetFile
     val positional = args.zipWithIndex.collect {
       case (a, i) if !a.startsWith("--")
         && (budgetIdx < 0 || i != budgetIdx + 1) => a
     }
-    require(positional.nonEmpty,
-      "usage: PlanAudit <sfDir> [--write] [--budget <file>] [queryName...]")
-    val sfDir = positional.head
-    val only = positional.drop(1).toSet
+    require(positional.nonEmpty, Usage)
+    Args(positional.head, args.contains("--write"), budgetFile,
+      positional.drop(1).toSet)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(sfDir, write, budgetFile, only) = parseArgs(args)
     val sfTag = sfDir.split("/").last
 
     val spark = graft.GraftSession.local(

@@ -38,6 +38,22 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
   }
 
+  test("--budget followed by another flag fails with the usage string") {
+    val e = intercept[IllegalArgumentException](
+      PlanAudit.parseArgs(Array("/sf/sf0.01", "--budget", "--write")))
+    assert(e.getMessage.contains(PlanAudit.Usage))
+  }
+
+  test("a trailing --budget without a file fails with the usage string") {
+    val e = intercept[IllegalArgumentException](
+      PlanAudit.parseArgs(Array("/sf/sf0.01", "q01_x", "--budget")))
+    assert(e.getMessage.contains(PlanAudit.Usage))
+    // the well-formed spelling still parses
+    assert(PlanAudit.parseArgs(
+        Array("/sf/sf0.01", "--budget", "b.json", "--write", "q01_x")) ==
+      PlanAudit.Args("/sf/sf0.01", write = true, "b.json", Set("q01_x")))
+  }
+
   test("budgets pin the standing plan claims: no unpartitioned " +
       "windows or cartesian shapes outside the documented carve-outs") {
     // the carve-outs are small and named; growth in either list is a
